@@ -54,6 +54,38 @@ def hyperplane_bucket_col(vec_col, planes: np.ndarray):
     return bucket
 
 
+def _lsh_probes(planes: np.ndarray, n_probe_bits: int, query_vec=None) -> list[int]:
+    """The one LSH multiprobe rule every tier shares: the query's sign-bit
+    bucket (bit_i = dot(q, plane_i) >= 0, the NumPy twin of
+    hyperplane_bucket_col) plus every bucket within ``n_probe_bits`` bit
+    flips (0, 1 or 2; more counts as 2), ascending. Without ``query_vec``
+    the result is the XOR masks themselves (the probes of bucket 0), which
+    a join side XORs against its own bucket column."""
+    n_planes = len(planes)
+    qbucket = 0
+    if query_vec is not None:
+        qv = np.asarray(query_vec, dtype=np.float64)
+        qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) >= 0))
+    masks = [0]
+    if n_probe_bits >= 1:
+        masks += [1 << i for i in range(n_planes)]
+    if n_probe_bits >= 2:
+        masks += [(1 << i) | (1 << j) for i in range(n_planes) for j in range(i + 1, n_planes)]
+    return sorted(qbucket ^ m for m in masks)
+
+
+def _exact_topk(cand: DataFrame, query_vec, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact re-rank of candidate rows — the reference's GEMV + sort + slice
+    over whatever a tier probed: dot with the query literal, top-k under the
+    (score DESC, id ASC) total order, returning (id, score)."""
+    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(query_vec)))
+    return (
+        scored.select(id_col, "score")
+        .orderBy(F.desc("score"), F.asc(id_col))
+        .limit(k)
+    )
+
+
 def brute_force_topk_multi(
     df: DataFrame,
     queries_df: DataFrame,
@@ -239,18 +271,12 @@ def lsh_topk(
     """Approximate top-k: only rows in the query's hyperplane bucket are
     scored. At scale the table is written partitioned by bucket so the scan
     prunes to 1/2^n_planes of the data before any scoring happens."""
-    dim = len(np.asarray(query_vec))
-    planes = hyperplanes(n_planes, dim, seed)
     qv = np.asarray(query_vec, dtype=np.float64)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) >= 0))
+    planes = hyperplanes(n_planes, len(qv), seed)
+    (qbucket,) = _lsh_probes(planes, 0, qv)
     bucketed = df.withColumn("bucket", hyperplane_bucket_col(vec_col, planes))
     cand = bucketed.where(F.col("bucket") == qbucket)
-    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-    return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _exact_topk(cand, qv, k, id_col, vec_col)
 
 
 def hyperplane_lsh_near_dup(
@@ -308,25 +334,11 @@ def lsh_topk_multiprobe(
     Hamming distance ``n_probe_bits`` of it. The standard recall lever — the
     scan fraction grows from 1/2^p to (1 + C(p,1) + ...)/2^p while staying
     partition-prunable when the table is written bucketed."""
-    dim = len(np.asarray(query_vec))
-    planes = hyperplanes(n_planes, dim, seed)
     qv = np.asarray(query_vec, dtype=np.float64)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) >= 0))
-    probes = {qbucket}
-    if n_probe_bits >= 1:
-        probes |= {qbucket ^ (1 << i) for i in range(n_planes)}
-    if n_probe_bits >= 2:
-        for i in range(n_planes):
-            for j in range(i + 1, n_planes):
-                probes.add(qbucket ^ (1 << i) ^ (1 << j))
+    planes = hyperplanes(n_planes, len(qv), seed)
     bucketed = df.withColumn("bucket", hyperplane_bucket_col(vec_col, planes))
-    cand = bucketed.where(F.col("bucket").isin(sorted(probes)))
-    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-    return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    cand = bucketed.where(F.col("bucket").isin(_lsh_probes(planes, n_probe_bits, qv)))
+    return _exact_topk(cand, qv, k, id_col, vec_col)
 
 
 def lsh_similarity_join(
@@ -567,12 +579,7 @@ def ivf_topk_pruned(
     order = np.argsort(-(cents @ qv))[:n_probe]
     df = spark.read.parquet(path)
     cand = df.where(F.col("ivf_cell").isin([int(i) for i in order]))
-    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-    return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _exact_topk(cand, qv, k, id_col, vec_col)
 
 
 def lsh_topk_pruned(
@@ -591,18 +598,9 @@ def lsh_topk_pruned(
     node), so non-matching directories are never read."""
     qv = np.asarray(query_vec, dtype=np.float64)
     planes = hyperplanes(n_planes, len(qv), seed)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes) if float(p @ qv) >= 0))
-    probes = {qbucket}
-    if n_probe_bits >= 1:
-        probes |= {qbucket ^ (1 << i) for i in range(n_planes)}
     df = spark.read.parquet(path)
-    cand = df.where(F.col("bucket").isin(sorted(probes)))
-    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-    return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    cand = df.where(F.col("bucket").isin(_lsh_probes(planes, n_probe_bits, qv)))
+    return _exact_topk(cand, qv, k, id_col, vec_col)
 
 
 def ivf_assign(
@@ -642,12 +640,7 @@ def ivf_topk(
     order = np.argsort(-(centroids @ qv))[:n_probe]
     assigned = ivf_assign(df, centroids, id_col, vec_col)
     cand = assigned.where(F.col("ivf_cell").isin([int(i) for i in order]))
-    scored = cand.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-    return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _exact_topk(cand, qv, k, id_col, vec_col)
 
 
 def pca_coarse_topk(
@@ -741,12 +734,7 @@ def binary_hamming_topk(
         .orderBy(F.asc("hamming"), F.asc(id_col))
         .limit(shortlist)
     )
-    return (
-        short.withColumn("score", V.dot(vec_col, V.vec_lit_sql(qv)))
-        .select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _exact_topk(short, qv, k, id_col, vec_col)
 
 
 def ivf_outliers(
@@ -1129,14 +1117,7 @@ def lsh_knn_join(
             raise ValueError("cannot infer dim from an empty left side; pass dim=")
         dim = int(probe[0])
     planes = hyperplanes(n_planes, dim, seed)
-    masks = [0]
-    if n_probe_bits >= 1:
-        masks += [1 << i for i in range(n_planes)]
-    if n_probe_bits >= 2:
-        masks += [
-            (1 << i) | (1 << j)
-            for i in range(n_planes) for j in range(i + 1, n_planes)
-        ]
+    masks = _lsh_probes(planes, n_probe_bits)
     if max_expected_candidates is not None:
         from .dedup import ScaleGuardError
 

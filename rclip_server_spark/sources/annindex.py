@@ -31,17 +31,17 @@ safe VACUUM / refresh streams all work with no extra wiring.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vector as VEC
-from ..functions.localrel import values_df
-from ..operators.ann import hyperplane_bucket_col, hyperplanes
+from ..operators.ann import _lsh_probes, hyperplane_bucket_col, hyperplanes
 from . import matview as M
 from . import versioned as V
-from .matview import (_apply_where, _check_include_cols,
-                      _where_expr)
+from .matview import _apply_where, _check_include_cols, _where_expr
+
+# the index's own columns besides key, vector and payload
+_RESERVED = ("bucket",)
 
 
 def _bucketed_rows(df: DataFrame, key: str, vec_col: str,
@@ -76,7 +76,7 @@ def create_ann_index(
                              "empty source; pass dim=")
         dim = int(probe[0])
     inc = _check_include_cols(df, key, vec_col, include_cols,
-                              reserved=("bucket",))
+                              reserved=_RESERVED)
     spec = {
         "ai_source": source_path, "ai_key": key,
         "ai_vec_col": vec_col, "ai_n_planes": int(n_planes),
@@ -98,16 +98,10 @@ def _spec_ai(path: str, version: int | None = None) -> dict:
     return spec
 
 
-def _state(spark: SparkSession, view_path: str, v: int,
-           probes: list[int] | None = None) -> DataFrame:
-    """The index state at a version, layout-dispatched through the
-    shared serving read (versioned.read_probed): on the bucketed
-    at-rest layout the probed LSH bucket VALUES resolve to physical
-    buckets driver-side and only those buckets' segment files enter
-    the plan, schema pinned from the manifest — zero pre-scan Spark
-    jobs."""
-    return V.read_probed(spark, view_path, v, "bucket",
-                         probe_values=probes)
+def _state(spark: SparkSession, view_path: str, v: int) -> DataFrame:
+    """The whole index state at a version through the shared serving
+    read (versioned.read_probed), schema pinned from the manifest."""
+    return V.read_probed(spark, view_path, v, "bucket")
 
 
 def read_ann_index(spark: SparkSession, view_path: str,
@@ -144,21 +138,6 @@ def convert_index_to_bucketed(spark: SparkSession, view_path: str,
                                  int(n_buckets))
 
 
-def _probe_hash_buckets(probes: list[int], n_buckets: int) -> list[int]:
-    """Physical hash buckets of the probed LSH bucket VALUES — the
-    exact writer-side expression (pmod(xxhash64(cast string), n))
-    evaluated DRIVER-SIDE in pure Python (functions/xxh.py, parity
-    pinned against the live Spark expression by tests/test_xxh.py):
-    zero Spark jobs on the serving path, a few microseconds for the
-    ≤(1+p+C(p,2))-entry probe list. (r12 ran a createDataFrame+collect
-    round trip here — bounded, but a full Spark job per query.) The
-    serving path itself routes through versioned.read_probed; this
-    helper remains as the parity-test seam for that resolution rule."""
-    from ..functions.xxh import buckets_of
-
-    return buckets_of([int(b) for b in probes], int(n_buckets))
-
-
 def refresh_ann_index(
     spark: SparkSession, view_path: str,
     recompute_fraction: float | None = M._RECOMPUTE_BOUND_FRACTION,
@@ -192,6 +171,27 @@ def refresh_ann_index_with_retry(
         max_retries)
 
 
+def _probe_rule(spec: dict, n_probe_bits: int) -> M._ProbeRule:
+    """The ANN kind's probe resolution for the serving skeleton: the
+    query's bucket and its ≤``n_probe_bits``-Hamming neighbours under
+    the spec's frozen planes (the shared multiprobe rule); widening adds
+    one Hamming ring at a time, then every bucket."""
+    dim = int(spec["ai_dim"])
+    planes = hyperplanes(int(spec["ai_n_planes"]), dim,
+                         int(spec["ai_seed"]))
+
+    def tiers(qv):
+        for bits in range(n_probe_bits, max(n_probe_bits, 2) + 1):
+            yield _lsh_probes(planes, bits, qv)
+        yield None
+
+    key, vec_col = spec["ai_key"], spec["ai_vec_col"]
+    return M._ProbeRule(
+        "bucket", "BIGINT", key, vec_col, dim,
+        (key, vec_col, *_RESERVED, *spec.get("ai_include_cols", [])),
+        tiers)
+
+
 def query_ann_index(
     spark: SparkSession, view_path: str, query_vec, k: int = 10,
     n_probe_bits: int = 1, version: int | None = None,
@@ -215,72 +215,13 @@ def query_ann_index(
     probe tier (more Hamming neighbors, finally ALL buckets — the
     exact filtered answer) and costs one extra count job, so the
     common non-selective case stops at the first tier with one count.
-    Returns (<key>, score[, payload cols referenced stay internal])."""
+    The plan is the shared serving skeleton (matview._query_probed).
+    Returns (<key>, score)."""
     v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ai(view_path, v)
-    key, vec_col = spec["ai_key"], spec["ai_vec_col"]
-    n_planes, dim, seed = (int(spec["ai_n_planes"]),
-                           int(spec["ai_dim"]), int(spec["ai_seed"]))
-    qv = np.asarray(query_vec, dtype=np.float64)
-    if qv.shape != (dim,):
-        raise ValueError(f"query dim {qv.shape} != index dim ({dim},)")
-    planes = hyperplanes(n_planes, dim, seed)
-    qbucket = int(sum((1 << i) for i, p in enumerate(planes)
-                      if float(p @ qv) >= 0))
-    flt = _where_expr(where) if where is not None else None
-
-    def _plan(probes: set | None) -> DataFrame:
-        # at-rest pruning: on a hash-bucketed index state
-        # (convert_index_to_bucketed) the probed LSH buckets resolve
-        # to their physical buckets driver-side and ONLY those
-        # buckets' segment files are named in the plan — non-probed
-        # buckets are skipped at manifest resolution (files, not
-        # rows). The residual bucket IN-list then prunes hash-collided
-        # rows inside survivors. probes=None is the guarantee tier:
-        # every bucket (exact filtered scan).
-        cand = _state(
-            spark, view_path, v,
-            probes=sorted(int(b) for b in probes) if probes else None)
-        if probes is not None:
-            cand = cand.where(F.col("bucket").isin(sorted(probes)))
-        if flt is not None:
-            cand = _apply_where(cand, flt, where)
-        scored = cand.withColumn(
-            "score", VEC.dot(vec_col, VEC.vec_lit_sql(qv)))
-        return (scored.select(key, "score")
-                .orderBy(F.desc("score"), F.asc(key))
-                .limit(k))
-
-    probes = _probe_set(qbucket, n_planes, n_probe_bits)
-    out = _plan(probes)
-    if min_results is None:
-        return out
-    want = min(int(min_results), int(k))
-    # widening ladder: next multiprobe tier(s), then ALL buckets. The
-    # ladder re-plans (files re-prune per tier) — candidates already
-    # scored are re-scored, which keeps every tier's result exactly
-    # the single-shot answer at that tier (no cross-tier merge state).
-    ladder = [_probe_set(qbucket, n_planes, b)
-              for b in range(n_probe_bits + 1, 3)]
-    ladder.append(None)
-    for wider in ladder:
-        if out.count() >= want:
-            return out
-        out = _plan(wider)
-    return out
-
-
-def _probe_set(qbucket: int, n_planes: int, n_probe_bits: int) -> set:
-    """The query bucket plus every bucket within n_probe_bits bit
-    flips — the single multiprobe rule all serving tiers share."""
-    probes = {int(qbucket)}
-    if n_probe_bits >= 1:
-        probes |= {qbucket ^ (1 << i) for i in range(n_planes)}
-    if n_probe_bits >= 2:
-        for i in range(n_planes):
-            for j in range(i + 1, n_planes):
-                probes.add(qbucket ^ (1 << i) ^ (1 << j))
-    return probes
+    return M._query_probed(
+        spark, view_path, v, _probe_rule(_spec_ai(view_path, v),
+                                         n_probe_bits),
+        query_vec, k, where=where, min_results=min_results)
 
 
 def query_ann_index_batch(
@@ -292,86 +233,17 @@ def query_ann_index_batch(
     amortized serving tier a training-data pipeline needs (millions of
     lookups arrive in batches; per-call plan-build cost dominates even
     at zero Spark jobs per plan). ``queries`` is a driver-side list of
-    ``(qid, vector)`` pairs (chunk huge query streams into batches of
-    ~1k; each batch is one job).
-
-    Plan shape: every query's probe set resolves driver-side (spec
-    planes, pure numpy), the UNION of probed buckets drives ONE
-    file-pruned state scan, and two constant-folded literal maps
-    attach queries to candidates row-locally — bucket -> [qid]
-    explodes each candidate into its matching (row, query) pairs and
-    qid -> qvec fetches the scoring vector (r15, guide §2.4: the r14
-    broadcast (qid, bucket, qvec) frame burned a broadcast-build job
-    + an AQE stage for what a literal lookup does inside the scan
-    stage; a row occupies exactly ONE bucket, so the explode emits
-    each (row, query) pair at most once — same inner-join semantics,
-    no dedup exchange). Exact dots score JVM-side, and a per-qid
-    window takes top-k. Shuffles: the qid window over candidate rows
-    only — never the corpus. Per query, rows returned are IDENTICAL
-    to query_ann_index (same probe rule, same fold-order dot over
-    bit-identical literals, same (score DESC, key ASC) total order).
+    ``(qid, vector)`` pairs; the plan shape and batch sizing are the
+    shared skeleton's (matview._query_probed_batch). Per query, rows
+    returned are IDENTICAL to query_ann_index; ``where`` is one payload
+    filter shared by the batch.
 
     Returns (qid, <key>, score) ordered (qid, score DESC, key)."""
-    from ..functions.localrel import _render
     v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ai(view_path, v)
-    key, vec_col = spec["ai_key"], spec["ai_vec_col"]
-    n_planes, dim, seed = (int(spec["ai_n_planes"]),
-                           int(spec["ai_dim"]), int(spec["ai_seed"]))
-    if not queries:
-        raise ValueError("query_ann_index_batch needs at least one "
-                         "(qid, vector) pair")
-    qids = [q for q, _ in queries]
-    if len(set(qids)) != len(qids):
-        raise ValueError("duplicate qids in batch")
-    planes = hyperplanes(n_planes, dim, seed)
-    by_bucket: dict[int, list] = {}
-    qvec_lit: dict = {}
-    union = set()
-    for qid, qv in queries:
-        q = np.asarray(qv, dtype=np.float64)
-        if q.shape != (dim,):
-            raise ValueError(
-                f"query {qid!r} dim {q.shape} != index dim ({dim},)")
-        qb = int(sum((1 << i) for i, p in enumerate(planes)
-                     if float(p @ q) >= 0))
-        probes = _probe_set(qb, n_planes, n_probe_bits)
-        union |= probes
-        ql = [float(x) for x in q]
-        qvec_lit[qid] = _render(ql, "array<double>")
-        for b in sorted(probes):
-            by_bucket.setdefault(int(b), []).append(qid)
-    qid_t = "string" if isinstance(qids[0], str) else "bigint"
-    # bucket -> array(qid) and qid -> qvec as literal maps: ConstantFolding
-    # evaluates both once per plan, and the per-row element_at lookups run
-    # inside the scan stage — the rendering reuses localrel's shortest-repr
-    # double text, so the vectors are bit-identical to the r14 VALUES frame
-    bmap_text = "map(" + ", ".join(
-        f"CAST({b} AS BIGINT), array({', '.join(_render(q, qid_t) for q in qs)})"
-        for b, qs in sorted(by_bucket.items())) + ")"
-    qmap_text = "map(" + ", ".join(
-        f"{_render(q, qid_t)}, {qvec_lit[q]}" for q in qids) + ")"
-    cand = _state(spark, view_path, v,
-                  probes=sorted(int(b) for b in union)).where(
-        F.col("bucket").isin(sorted(union)))
-    if where is not None:
-        # shared metadata filter across the batch (payload predicate
-        # pushed into the ONE probed scan, before the query lookup)
-        cand = _apply_where(cand, _where_expr(where), where)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"),
-                                            F.asc(key))
-    return (cand
-            .withColumn(qid_col,
-                        F.explode(F.expr(f"element_at({bmap_text}, bucket)")))
-            .withColumn("score", VEC.dot(
-                F.col(vec_col),
-                F.expr(f"element_at({qmap_text}, `{qid_col}`)")))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .select(qid_col, key, "score")
-            .orderBy(qid_col, F.desc("score"), F.asc(key)))
+    return M._query_probed_batch(
+        spark, view_path, v, _probe_rule(_spec_ai(view_path, v),
+                                         n_probe_bits),
+        "query_ann_index_batch", queries, k, qid_col, where)
 
 
 def knn_join_via_index(
@@ -415,13 +287,7 @@ def knn_join_via_index(
     n_planes, dim, seed = (int(spec["ai_n_planes"]),
                            int(spec["ai_dim"]), int(spec["ai_seed"]))
     planes = hyperplanes(n_planes, dim, seed)
-    masks = [0]
-    if n_probe_bits >= 1:
-        masks += [1 << i for i in range(n_planes)]
-    if n_probe_bits >= 2:
-        masks += [(1 << i) | (1 << j)
-                  for i in range(n_planes)
-                  for j in range(i + 1, n_planes)]
+    masks = _lsh_probes(planes, n_probe_bits)
     if max_expected_candidates is not None:
         nl = int(n_left) if n_left is not None else left.count()
         nr = V.table_row_count(view_path, v)  # manifest, zero jobs

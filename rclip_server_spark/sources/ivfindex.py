@@ -51,6 +51,9 @@ from . import matview as M
 from . import versioned as V
 from .matview import _INSERTING, _RETRACTING
 
+# the index's own columns besides key, vector and payload
+_RESERVED = ("ivf_cell", "pq_codes")
+
 
 def _assigned_rows(df: DataFrame, key: str, vec_col: str,
                    centroids: np.ndarray, codebooks=None,
@@ -116,7 +119,7 @@ def create_ivf_index(
     src_v = V.current_version(source_path)
     df = M._read_source(spark, source_path, src_v)
     inc = _check_include_cols(df, key, vec_col, include_cols,
-                              reserved=("ivf_cell", "pq_codes"))
+                              reserved=_RESERVED)
     if centroids is None:
         centroids = ivf_train_kmeans(df, k=int(n_cells), iters=int(iters),
                                      id_col=key, vec_col=vec_col,
@@ -251,17 +254,10 @@ def _codebooks(spec: dict):
     return None if b is None else np.asarray(b, dtype=np.float64)
 
 
-def _state(spark: SparkSession, view_path: str, v: int,
-           cells: list[int] | None = None) -> DataFrame:
-    """Layout-dispatched state read through the shared serving read
-    (versioned.read_probed, bucket key = ivf_cell): on the bucketed
-    at-rest layout the probed CELLS resolve to physical buckets
-    driver-side and only those buckets' segment files enter the plan,
-    schema pinned from the manifest — zero pre-scan Spark jobs."""
-    return V.read_probed(
-        spark, view_path, v, "ivf_cell",
-        probe_values=None if cells is None else [int(c) for c in
-                                                 cells])
+def _state(spark: SparkSession, view_path: str, v: int) -> DataFrame:
+    """The whole index state at a version through the shared serving
+    read (versioned.read_probed), schema pinned from the manifest."""
+    return V.read_probed(spark, view_path, v, "ivf_cell")
 
 
 def read_ivf_index(spark: SparkSession, view_path: str,
@@ -525,6 +521,29 @@ def refresh_ivf_index_with_retry(
         max_retries)
 
 
+def _probe_rule(spec: dict, n_probe: int) -> M._ProbeRule:
+    """The IVF kind's probe resolution for the serving skeleton: the
+    ``n_probe`` cells whose stored centroids rank highest by dot
+    (np.argsort(-dots), zero Spark jobs), in rank order; widening
+    doubles the probed cells until every cell is in."""
+    cents = _centroids(spec)
+    n_cells = int(spec["ii_n_cells"])
+
+    def tiers(qv):
+        order = np.argsort(-(cents @ qv))
+        n = int(n_probe)
+        yield [int(i) for i in order[:n]]
+        while 0 < n < n_cells:
+            n = min(n * 2, n_cells)
+            yield [int(i) for i in order[:n]]
+
+    key, vec_col = spec["ii_key"], spec["ii_vec_col"]
+    return M._ProbeRule(
+        "ivf_cell", "INT", key, vec_col, int(spec["ii_dim"]),
+        (key, vec_col, *_RESERVED, *spec.get("ii_include_cols", [])),
+        tiers)
+
+
 def query_ivf_index(
     spark: SparkSession, view_path: str, query_vec, k: int = 10,
     n_probe: int = 2, version: int | None = None,
@@ -557,18 +576,12 @@ def query_ivf_index(
     can leave fewer than k probed survivors; pass ``min_results``
     (≤ k) to adaptively WIDEN the probe: each escalation doubles
     n_probe (finally ALL cells — the exact filtered answer) and costs
-    one extra count job.
+    one extra count job. The plan is the shared serving skeleton
+    (matview._query_probed).
 
     Returns (<key>, score); final scores are exact dots either way."""
     v = V.current_version(view_path) if version is None else int(version)
     spec = _spec_ii(view_path, v)
-    key, vec_col = spec["ii_key"], spec["ii_vec_col"]
-    dim = int(spec["ii_dim"])
-    n_cells = int(spec["ii_n_cells"])
-    qv = np.asarray(query_vec, dtype=np.float64)
-    if qv.shape != (dim,):
-        raise ValueError(f"query dim {qv.shape} != index dim ({dim},)")
-    cents = _centroids(spec)
     if int(n_probe) < 1:
         # also the widening ladder's loop variant: doubling from 0
         # would never reach n_cells
@@ -576,53 +589,30 @@ def query_ivf_index(
     if method not in ("exact", "adc"):
         raise ValueError(f"unknown method {method!r}; "
                          f"use 'exact' or 'adc'")
-    from .matview import _apply_where, _where_expr
+    rank = None
+    if method == "adc":
+        from ..operators.ann import ivf_pq_topk
 
-    flt = _where_expr(where) if where is not None else None
+        books = _codebooks(spec)
+        if books is None:
+            raise ValueError(
+                f"{view_path} was built without PQ codebooks — "
+                f"recreate with pq_m=<subspaces> for method='adc'")
 
-    def _plan(probe_n: int) -> DataFrame:
-        order = np.argsort(-(cents @ qv))[:probe_n]
-        cells = [int(i) for i in order]
-        cand = _state(spark, view_path, v, cells=cells).where(
-            F.col("ivf_cell").isin(cells))
-        if flt is not None:
-            cand = _apply_where(cand, flt, where)
-        if method == "adc":
-            from ..operators.ann import ivf_pq_topk
-
-            books = _codebooks(spec)
-            if books is None:
-                raise ValueError(
-                    f"{view_path} was built without PQ codebooks — "
-                    f"recreate with pq_m=<subspaces> for method='adc'")
+        def rank(cand, qv, cells):
             # the probed-cell filter is already applied (and file-
             # pruned); ivf_pq_topk re-applies it idempotently from the
             # same probe rule, then ADC-shortlists and exact-re-ranks
-            # in-state. The payload filter above shrinks its
-            # candidate set BEFORE the LUT pass.
-            return ivf_pq_topk(cand, qv, cents, books, k=k,
-                               n_probe=probe_n, shortlist=shortlist,
-                               id_col=key, vec_col=vec_col)
-        scored = cand.withColumn(
-            "score", VEC.dot(vec_col, VEC.vec_lit_sql(qv)))
-        return (scored.select(key, "score")
-                .orderBy(F.desc("score"), F.asc(key))
-                .limit(k))
+            # in-state. The payload filter shrinks its candidate set
+            # BEFORE the LUT pass.
+            return ivf_pq_topk(cand, qv, _centroids(spec), books, k=k,
+                               n_probe=len(cells), shortlist=shortlist,
+                               id_col=spec["ii_key"],
+                               vec_col=spec["ii_vec_col"])
 
-    out = _plan(int(n_probe))
-    if min_results is None:
-        return out
-    want = min(int(min_results), int(k))
-    # widening ladder: double the probed cells until all cells are in
-    # (the exact filtered answer). Each tier is a fresh single-shot
-    # plan — file pruning re-resolves, no cross-tier merge state.
-    probe_n = int(n_probe)
-    while probe_n < n_cells:
-        if out.count() >= want:
-            return out
-        probe_n = min(probe_n * 2, n_cells)
-        out = _plan(probe_n)
-    return out
+    return M._query_probed(spark, view_path, v, _probe_rule(spec, n_probe),
+                           query_vec, k, where=where,
+                           min_results=min_results, rank=rank)
 
 
 def query_ivf_index_batch(
@@ -631,77 +621,14 @@ def query_ivf_index_batch(
     qid_col: str = "qid", where: str | None = None,
 ) -> DataFrame:
     """M queries against the maintained IVF index in ONE plan (the
-    exact re-rank tier) — the amortized serving form: each query's
-    n_probe cells rank driver-side from the spec's stored centroids
-    (zero Spark jobs), the UNION of probed cells drives ONE
-    file-pruned state scan, a broadcast (qid, ivf_cell, qvec) frame
-    equi-joins candidates to their queries (a row lives in exactly
-    ONE cell — no dedup exchange), exact dots score JVM-side, and a
-    per-qid window takes top-k. Per query, rows are IDENTICAL to
-    query_ivf_index(method='exact'): same probe rule
-    (np.argsort(-dots)), same fold-order dot, same
-    (score DESC, key ASC) total order. The ADC tier stays per-query
-    (each query carries its own LUT; batch it by chunking calls).
+    exact re-rank tier) — the amortized serving form; the plan shape
+    and batch sizing are the shared skeleton's
+    (matview._query_probed_batch). Per query, rows are IDENTICAL to
+    query_ivf_index(method='exact'). The ADC tier stays per-query (each
+    query carries its own LUT; batch it by chunking calls).
 
     Returns (qid, <key>, score) ordered (qid, score DESC, key)."""
     v = V.current_version(view_path) if version is None else int(version)
-    spec = _spec_ii(view_path, v)
-    key, vec_col = spec["ii_key"], spec["ii_vec_col"]
-    dim = int(spec["ii_dim"])
-    if not queries:
-        raise ValueError("query_ivf_index_batch needs at least one "
-                         "(qid, vector) pair")
-    qids = [q for q, _ in queries]
-    if len(set(qids)) != len(qids):
-        raise ValueError("duplicate qids in batch")
-    from ..functions.localrel import _render
-
-    cents = _centroids(spec)
-    by_cell: dict[int, list] = {}
-    qvec_lit: dict = {}
-    union = set()
-    for qid, qv in queries:
-        q = np.asarray(qv, dtype=np.float64)
-        if q.shape != (dim,):
-            raise ValueError(
-                f"query {qid!r} dim {q.shape} != index dim ({dim},)")
-        cells = [int(i) for i in np.argsort(-(cents @ q))[:int(n_probe)]]
-        union |= set(cells)
-        qvec_lit[qid] = _render([float(x) for x in q], "array<double>")
-        for c in cells:
-            by_cell.setdefault(c, []).append(qid)
-    qid_t = "string" if isinstance(qids[0], str) else "bigint"
-    # cell -> array(qid) and qid -> qvec as constant-folded literal maps:
-    # the per-row element_at lookups run inside the probed scan stage,
-    # replacing the r14 broadcast (qid, cell, qvec) frame's build job +
-    # AQE stage (guide §2.4; same rewrite as query_ann_index_batch —
-    # rows occupy exactly one cell, so the explode emits each
-    # (row, query) pair at most once: inner-join semantics preserved)
-    cmap_text = "map(" + ", ".join(
-        f"CAST({c} AS INT), array({', '.join(_render(q, qid_t) for q in qs)})"
-        for c, qs in sorted(by_cell.items())) + ")"
-    qmap_text = "map(" + ", ".join(
-        f"{_render(q, qid_t)}, {qvec_lit[q]}" for q in qids) + ")"
-    cand = _state(spark, view_path, v,
-                  cells=sorted(union)).where(
-        F.col("ivf_cell").isin(sorted(union)))
-    if where is not None:
-        # shared metadata filter across the batch (payload predicate
-        # pushed into the ONE probed scan, before the query lookup)
-        from .matview import _apply_where, _where_expr
-
-        cand = _apply_where(cand, _where_expr(where), where)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"),
-                                            F.asc(key))
-    return (cand
-            .withColumn(qid_col,
-                        F.explode(F.expr(f"element_at({cmap_text}, ivf_cell)")))
-            .withColumn("score", VEC.dot(
-                F.col(vec_col),
-                F.expr(f"element_at({qmap_text}, `{qid_col}`)")))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .select(qid_col, key, "score")
-            .orderBy(qid_col, F.desc("score"), F.asc(key)))
+    return M._query_probed_batch(
+        spark, view_path, v, _probe_rule(_spec_ii(view_path, v), n_probe),
+        "query_ivf_index_batch", queries, k, qid_col, where)

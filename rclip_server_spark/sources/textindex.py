@@ -36,6 +36,8 @@ all work on it with no extra wiring.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +47,10 @@ from . import matview as M
 from . import versioned as V
 
 from .matview import _INSERTING, _RETRACTING  # canonical CDC classes
+from .matview import _apply_where, _where_expr
+
+# the postings columns besides key and payload
+_RESERVED = ("term", "tf", "dl", "positions")
 
 
 def _postings(df: DataFrame, key: str, text_col: str,
@@ -112,7 +118,7 @@ def create_text_index(
     df = M._read_source(spark, source_path, src_v)
     inc = _check_include_cols(
         df, key, text_col, include_cols,
-        reserved=("term", "tf", "dl", "positions"))
+        reserved=_RESERVED)
     n_docs, total_len = _corpus_stats(df, text_col)
     spec = {
         "ti_source": source_path, "ti_key": key,
@@ -255,6 +261,48 @@ def refresh_text_index_with_retry(
         max_retries)
 
 
+def _term_mult(terms: list[str] | str) -> dict:
+    """A query's terms (a string splits lower-cased on whitespace)
+    collapsed to {unique term: multiplicity}, in first-occurrence
+    order: create_map rejects duplicate keys (mapKeyDedupPolicy=
+    EXCEPTION), and the batch scorer sums one contribution PER
+    OCCURRENCE — contrib is linear in idf, so weighting idf by the
+    multiplicity reproduces it exactly."""
+    if isinstance(terms, str):
+        terms = [t for t in terms.lower().split() if t]
+    return dict(Counter(terms))
+
+
+def _bm25_weights(spec: dict, view_path: str):
+    """(idf, tf part) of the Lucene BM25 term weight over the probed
+    postings — one copy for the single and batch queries, each of which
+    folds a term's contribution as ``mult * idf * tf_part``, left to
+    right, for bit-parity with the batch scorer. df per term is a COUNT
+    window over the term partition (postings carry tf > 0 rows only, so
+    count(rows) IS df): the query stays ONE lazy plan over a SINGLE scan
+    of the probed postings (r12 collected a per-term aggregate first — a
+    Spark job per query; a broadcast join would scan them twice), the
+    term shuffle is O(matching postings), and idf uses the SAME JVM
+    F.log as the batch scorer. N/avgdl come from the spec's exact
+    integer stats."""
+    from pyspark.sql import Window
+
+    k1, b = float(spec["ti_k1"]), float(spec["ti_b"])
+    n = float(int(spec["ti_ndocs"]))
+    if n <= 0:
+        raise ValueError(f"{view_path} indexes an empty corpus")
+    avgdl = float(int(spec["ti_total_len"])) / n
+    dfq = (F.count(F.lit(1)).over(Window.partitionBy("term"))
+           .cast("double"))
+    idf = F.log((F.lit(n) - dfq + F.lit(0.5))
+                / (dfq + F.lit(0.5)) + F.lit(1.0))
+    tf = F.col("tf").cast("double")
+    denom = tf + F.lit(k1) * (F.lit(1.0 - b)
+                              + F.lit(b) * (F.col("dl").cast("double")
+                                            / F.lit(avgdl)))
+    return idf, (tf * F.lit(k1 + 1.0)) / denom
+
+
 def query_text_index(
     spark: SparkSession, view_path: str, terms: list[str] | str,
     k: int = 10, version: int | None = None,
@@ -262,14 +310,13 @@ def query_text_index(
 ) -> DataFrame:
     """Top-k documents by BM25, scored FROM the maintained postings:
     reads only the query terms' posting rows, df per term comes from a
-    ≤|terms|-row aggregation over those same rows (broadcast-joined
-    back in-plan — the whole query is ONE lazy plan, zero Spark jobs
-    before execution), and N/avgdl come from the spec's exact integer
-    stats — O(matching postings), never a corpus scan. Returns
-    (<key>, bm25), the same formula (idf in the same JVM F.log),
-    filter (score > 0), ordering, and tie-break as
-    retrieval.bm25_topk, so the indexed answer is checkable against
-    the batch scorer.
+    COUNT window over those same rows (_bm25_weights — the whole query
+    is ONE lazy plan, zero Spark jobs before execution), and N/avgdl
+    come from the spec's exact integer stats — O(matching postings),
+    never a corpus scan. Returns (<key>, bm25), the same formula (idf
+    in the same JVM F.log), filter (score > 0), ordering, and
+    tie-break as retrieval.bm25_topk, so the indexed answer is
+    checkable against the batch scorer.
 
     ``where`` is a SQL predicate over the index's payload columns
     (``include_cols`` at CREATE) and key — FILTERED lexical search.
@@ -279,60 +326,24 @@ def query_text_index(
     candidates before the doc-aggregation shuffle (the scan itself
     is already term-pruned; the filter never joins back to the
     source)."""
-    if isinstance(terms, str):
-        terms = [t for t in terms.lower().split() if t]
-    if not terms:
+    mult = _term_mult(terms)
+    if not mult:
         raise ValueError("query_text_index needs at least one term")
-    # collapse repeats to (unique term, multiplicity): create_map
-    # rejects duplicate keys (mapKeyDedupPolicy=EXCEPTION), and the
-    # batch scorer sums one contribution PER OCCURRENCE — contrib is
-    # linear in idf, so weighting idf by the multiplicity reproduces
-    # it exactly
-    mult = {}
-    for t in terms:
-        mult[t] = mult.get(t, 0) + 1
     terms = list(mult)
     v = V.current_version(view_path) if version is None else int(version)
     spec = _spec_ti(view_path, v)
     key = spec["ti_key"]
-    k1, b = float(spec["ti_k1"]), float(spec["ti_b"])
-    n = float(int(spec["ti_ndocs"]))
-    total_len = float(int(spec["ti_total_len"]))
-    if n <= 0:
-        raise ValueError(f"{view_path} indexes an empty corpus")
-    avgdl = total_len / n
+    idf, tfp = _bm25_weights(spec, view_path)
     # bucketed at-rest state: only the query terms' hash buckets'
     # files enter the plan (driver-side term→bucket resolution); the
     # residual IN-list prunes hash-collided terms inside survivors
     hits = _state(spark, view_path, v, terms=terms).where(
         F.col("term").isin(*terms))
-    # df per query term: a COUNT window over the term partition
-    # (postings carry tf > 0 rows only, so count(rows) IS df) — r12
-    # collected a per-term aggregate to the driver, one full Spark
-    # job per query before the scan; the window keeps the whole
-    # query ONE lazy plan (zero plan-time jobs) over a SINGLE scan of
-    # the probed postings (a broadcast-join formulation would scan
-    # them twice), with idf in the SAME JVM F.log the batch scorer
-    # uses. The term shuffle is O(matching postings), never corpus.
-    from pyspark.sql import Window
-
-    dfq = (F.count(F.lit(1)).over(Window.partitionBy("term"))
-           .cast("double"))
     mult_map = F.create_map(*[x for t in terms
                               for x in (F.lit(t),
                                         F.lit(float(mult[t])))])
-    idf = F.log((F.lit(n) - dfq + F.lit(0.5))
-                / (dfq + F.lit(0.5)) + F.lit(1.0))
-    tf = F.col("tf").cast("double")
-    denom = tf + F.lit(k1) * (F.lit(1.0 - b)
-                              + F.lit(b) * (F.col("dl").cast("double")
-                                            / F.lit(avgdl)))
-    contrib = (mult_map[F.col("term")] * idf
-               * ((tf * F.lit(k1 + 1.0)) / denom))
-    cand = hits.withColumn("_c", contrib)
+    cand = hits.withColumn("_c", mult_map[F.col("term")] * idf * tfp)
     if where is not None:
-        from .matview import _apply_where, _where_expr
-
         cand = _apply_where(cand, _where_expr(where), where)
     scored = cand.groupBy(key).agg(F.sum("_c").alias("bm25"))
     return (scored.where(F.col("bm25") > 0.0)
@@ -359,78 +370,47 @@ def query_text_index_batch(
     single-query plan computes); a broadcast (qid, term, mult) frame
     fans each posting out to the queries that asked for its term; the
     same fold-order contribution sums per (qid, doc) and a per-qid
-    window takes top-k. Shuffles: the term window + the (qid, key)
-    aggregation over MATCHING postings only — never the corpus. Per
-    query, rows are IDENTICAL to query_text_index (same formula,
-    same multiplicity fold, same (bm25 DESC, key ASC) order).
+    window takes top-k (matview._topk_per_qid). Shuffles: the term
+    window + the (qid, key) aggregation over MATCHING postings only —
+    never the corpus. Per query, rows are IDENTICAL to
+    query_text_index (same formula, same multiplicity fold, same
+    (bm25 DESC, key ASC) order). The query frame stays a broadcast
+    join, not the ANN/IVF literal maps: scores flow through a float
+    SUM whose order a plan rewrite could change.
 
     Returns (qid, <key>, bm25) ordered (qid, bm25 DESC, key)."""
-    if not queries:
-        raise ValueError("query_text_index_batch needs at least one "
-                         "(qid, terms) pair")
-    per_q, union_terms = [], set()
-    qids = [q for q, _ in queries]
-    if len(set(qids)) != len(qids):
-        raise ValueError("duplicate qids in batch")
-    for qid, terms in queries:
-        if isinstance(terms, str):
-            terms = [t for t in terms.lower().split() if t]
-        if not terms:
-            raise ValueError(f"query {qid!r} has no terms")
-        mult: dict = {}
-        for t in terms:
-            mult[t] = mult.get(t, 0) + 1
-        per_q.append((qid, mult))
-        union_terms |= set(mult)
     v = V.current_version(view_path) if version is None else int(version)
     spec = _spec_ti(view_path, v)
     key = spec["ti_key"]
-    k1, b = float(spec["ti_k1"]), float(spec["ti_b"])
-    n = float(int(spec["ti_ndocs"]))
-    total_len = float(int(spec["ti_total_len"]))
-    if n <= 0:
-        raise ValueError(f"{view_path} indexes an empty corpus")
-    avgdl = total_len / n
-    terms_sorted = sorted(union_terms)
+    qid_t = M._check_batch(
+        "query_text_index_batch", queries, qid_col,
+        (key, *_RESERVED, *spec.get("ti_include_cols", [])))
+    per_q = []
+    for qid, terms in queries:
+        mult = _term_mult(terms)
+        if not mult:
+            raise ValueError(f"query {qid!r} has no terms")
+        per_q.append((qid, mult))
+    terms_sorted = sorted({t for _, mult in per_q for t in mult})
+    idf, tfp = _bm25_weights(spec, view_path)
     hits = _state(spark, view_path, v, terms=terms_sorted).where(
         F.col("term").isin(*terms_sorted))
-    from pyspark.sql import Window
-
-    dfq = (F.count(F.lit(1)).over(Window.partitionBy("term"))
-           .cast("double"))
-    idf = F.log((F.lit(n) - dfq + F.lit(0.5))
-                / (dfq + F.lit(0.5)) + F.lit(1.0))
-    tf = F.col("tf").cast("double")
-    denom = tf + F.lit(k1) * (F.lit(1.0 - b)
-                              + F.lit(b) * (F.col("dl").cast("double")
-                                            / F.lit(avgdl)))
-    # the single-query contrib is mult * idf * ((tf*(k1+1))/denom),
-    # left-assoc — keep the exact fold order for bit-parity
-    base = hits.withColumn("_idf", idf).withColumn(
-        "_tfp", (tf * F.lit(k1 + 1.0)) / denom)
+    base = hits.withColumn("_idf", idf).withColumn("_tfp", tfp)
     if where is not None:
         # shared payload filter across the batch: applied AFTER the
         # global-df window (filters select docs, never reshape idf —
         # the single-query rule), before the query fan-out join
-        from .matview import _apply_where, _where_expr
-
         base = _apply_where(base, _where_expr(where), where)
     pairs = [(qid, t, float(m))
              for qid, mult in per_q for t, m in mult.items()]
-    qid_t = "string" if isinstance(qids[0], str) else "bigint"
     pdf = values_df(
         spark, pairs, f"{qid_col} {qid_t}, term string, _mult double")
     scored = (base.join(F.broadcast(pdf), "term")
               .withColumn("_c", F.col("_mult") * F.col("_idf")
                           * F.col("_tfp"))
               .groupBy(qid_col, key).agg(F.sum("_c").alias("bm25")))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("bm25"),
-                                            F.asc(key))
-    return (scored.where(F.col("bm25") > 0.0)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .select(qid_col, key, "bm25")
-            .orderBy(qid_col, F.desc("bm25"), F.asc(key)))
+    return M._topk_per_qid(scored.where(F.col("bm25") > 0.0), qid_col,
+                           key, "bm25", k)
 
 
 def query_phrase_index(
@@ -467,8 +447,6 @@ def query_phrase_index(
     if where is not None:
         # phrase matching has no global stats, so the payload filter
         # applies BEFORE the pivot — pushed into the term-pruned scan
-        from .matview import _apply_where, _where_expr
-
         hits = _apply_where(hits, _where_expr(where), where)
     hits = hits.select(key, "term", "positions")
     # one row per candidate doc: term -> sorted offsets (postings hold

@@ -123,7 +123,9 @@ def test_bucketed_at_rest_layout_prunes_files(spark, vecs, cat):
     qb = int(sum((1 << i) for i, p in enumerate(planes)
                  if float(p @ np.asarray(QV)) >= 0))
     probes = {qb} | {qb ^ (1 << i) for i in range(4)}
-    phys = set(AI._probe_hash_buckets(sorted(probes), 16))
+    from rclip_server_spark.functions.xxh import buckets_of
+
+    phys = set(buckets_of(sorted(probes), 16))
     probed_segs = {s for b in phys
                    for s in m["buckets"].get(str(b), [])}
     other_segs = {s for b, ss in m["buckets"].items()
@@ -292,9 +294,7 @@ def test_filtered_query_matches_filtered_brute_force(spark, vecs, cat):
     planes = ann.hyperplanes(4, 64, 42)
     import numpy as np
 
-    qb = int(sum((1 << i) for i, p in enumerate(planes)
-                 if float(p @ np.asarray(QV)) >= 0))
-    probes = sorted(AI._probe_set(qb, 4, 1))
+    probes = ann._lsh_probes(planes, 1, np.asarray(QV))
     want = (state.where(F.col("bucket").isin(probes))
             .where("category = 2 AND NOT flagged")
             .withColumn("score", VEC.dot(F.col("embedding"),

@@ -1,10 +1,15 @@
-"""r14 batched multi-query serving from the maintained indexes:
-query_{ann,ivf,text}_index_batch run M lookups in ONE plan (union of
-probe sets -> one file-pruned scan -> broadcast query frame -> per-qid
-window top-k). The contract is ROW-IDENTITY per query with the
-per-query loop — same probe rule, same fold-order scoring, same
+"""Batched multi-query serving from the maintained indexes:
+query_{ann,ivf,text}_index_batch run M lookups in ONE plan. ANN and IVF
+share the serving skeleton (matview._query_probed_batch): the union of
+the queries' probe sets drives one file-pruned scan, constant-folded
+literal maps (probe value -> [qid], qid -> qvec) attach queries to
+candidates inside the scan stage with no join, and a per-qid window
+takes top-k. The text batch fans postings out through a broadcast
+(qid, term, mult) frame. The contract is ROW-IDENTITY per query with
+the per-query loop — same probe rule, same fold-order scoring, same
 (score DESC, key ASC) total order — plus zero plan-time Spark jobs on
-the bucketed at-rest layout."""
+the bucketed at-rest layout, and a ValueError (never a silently
+overwritten column) when qid_col names an index or serving column."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -101,8 +106,9 @@ def test_text_batch_matches_per_query_loop(spark, built):
         assert got.get(qid, []) == want, f"qid {qid!r} diverged"
 
 
-def test_ann_batch_plan_has_no_broadcast_join(spark, built):
-    """r15: the (qid, bucket, qvec) broadcast frame is gone — queries
+@pytest.mark.parametrize("kind", ["ann", "ivf"])
+def test_batch_plan_has_no_broadcast_join(spark, kind):
+    """r15: the (qid, probe, qvec) broadcast frame is gone — queries
     attach to candidates through constant-folded literal-map lookups
     (a Generate over element_at), so the batch plan pays no
     broadcast-build job and no join at all: one probed scan, the qid
@@ -114,14 +120,20 @@ def test_ann_batch_plan_has_no_broadcast_join(spark, built):
 
     from rclip_server_spark.sources import versioned as VT
 
-    tmp = tempfile.mkdtemp(prefix="annbatch_plan_")
+    tmp = tempfile.mkdtemp(prefix=f"{kind}batch_plan_")
     rows = [(i, QVS[i % len(QVS)]) for i in range(64)]
     src = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     VT.create(spark, tmp + "/src", src)
-    AI.create_ann_index(spark, tmp + "/src", tmp + "/idx", key="vec_id",
-                        n_planes=4)
-    df = AI.query_ann_index_batch(
-        spark, tmp + "/idx", [(i, qv) for i, qv in enumerate(QVS)], k=5)
+    if kind == "ann":
+        AI.create_ann_index(spark, tmp + "/src", tmp + "/idx",
+                            key="vec_id", n_planes=4)
+        query = AI.query_ann_index_batch
+    else:
+        II.create_ivf_index(spark, tmp + "/src", tmp + "/idx",
+                            key="vec_id", n_cells=4, iters=2)
+        query = II.query_ivf_index_batch
+    queries = [(i, qv) for i, qv in enumerate(QVS)]
+    df = query(spark, tmp + "/idx", queries, k=5)
     df.count()  # settle AQE so the final plan is inspectable
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
@@ -129,9 +141,7 @@ def test_ann_batch_plan_has_no_broadcast_join(spark, built):
     # count the DAGScheduler jobs one execution costs (r14: 5)
     sc = spark.sparkContext
     j0 = sc._jsc.sc().dagScheduler().nextJobId()
-    AI.query_ann_index_batch(
-        spark, tmp + "/idx", [(i, qv) for i, qv in enumerate(QVS)],
-        k=5).count()
+    query(spark, tmp + "/idx", queries, k=5).count()
     assert sc._jsc.sc().dagScheduler().nextJobId() - j0 <= 4
 
 
@@ -169,3 +179,27 @@ def test_batch_guards(spark, built):
     with pytest.raises(ValueError, match="dim"):
         II.query_ivf_index_batch(spark, built.get("bii")["path"],
                                  [(1, [0.0] * 7)])
+
+
+@pytest.mark.parametrize("kind", ["ann", "ivf", "text"])
+def test_batch_qid_col_collision_raises(spark, built, kind):
+    """A qid_col naming an index column (here the key) used to be
+    overwritten by the plan's withColumn — ANN and IVF then returned
+    query ids in the key column. Every batch kind now refuses it, as
+    well as serving columns and backticks."""
+    name, query, key, queries = {
+        "ann": ("bai", AI.query_ann_index_batch, "vec_id",
+                [(1, QVS[0])]),
+        "ivf": ("bii", II.query_ivf_index_batch, "vec_id",
+                [(1, QVS[0])]),
+        "text": ("bti", TI.query_text_index_batch, "doc_id",
+                 [(1, "data model")]),
+    }[kind]
+    vp = built.get(name)["path"]
+    for bad in (key, key.upper(), "score", "bm25", "_rn", "q`id"):
+        with pytest.raises(ValueError, match="qid_col"):
+            query(spark, vp, queries, k=3, qid_col=bad)
+    with pytest.raises(ValueError, match="all int or all str"):
+        query(spark, vp, [(1, queries[0][1]), ("b", queries[0][1])], k=3)
+    got = query(spark, vp, queries, k=3, qid_col="request").collect()
+    assert got and all(r["request"] == 1 for r in got)

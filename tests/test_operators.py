@@ -429,6 +429,26 @@ def test_lsh_bucketed_write_prunes_partitions(spark, embeddings, tmp_path):
     assert {r.vec_id for r in pruned.collect()} == mem
 
 
+def test_lsh_topk_pruned_probes_two_bit_flips(spark, embeddings, tmp_path):
+    """lsh_topk_pruned shares the one multiprobe rule: at n_probe_bits=2
+    it probes the Hamming-2 ring too. With k >= the row count the result
+    is exactly the probed rows, so the sets must match in-memory
+    multiprobe (the pruned tier used to stop at Hamming-1)."""
+    path = str(tmp_path / "emb_bucketed")
+    ann.write_bucketed_by_lsh(embeddings, path, n_planes=4, dim=64)
+    n = embeddings.count()
+
+    def rows(df):
+        return {(r.vec_id, round(r.score, 9)) for r in df.collect()}
+
+    pruned = rows(ann.lsh_topk_pruned(spark, path, QV, k=n, n_planes=4,
+                                      n_probe_bits=2))
+    assert pruned == rows(ann.lsh_topk_multiprobe(
+        embeddings, QV, k=n, n_planes=4, n_probe_bits=2))
+    assert len(pruned) > len(rows(ann.lsh_topk_pruned(
+        spark, path, QV, k=n, n_planes=4, n_probe_bits=1)))
+
+
 def test_ivf_partitioned_write_prunes_partitions(spark, embeddings, tmp_path):
     from rclip_server_spark.contract import CENTROIDS
 

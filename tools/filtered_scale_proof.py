@@ -103,12 +103,10 @@ def main() -> None:
         uq = AI.query_ann_index(spark, idx, QV, k=K, n_probe_bits=1)
         import numpy as np
 
-        from rclip_server_spark.operators.ann import hyperplanes
+        from rclip_server_spark.operators.ann import (_lsh_probes,
+                                                      hyperplanes)
 
-        planes = hyperplanes(6, 64, 42)
-        qb = int(sum((1 << i) for i, p in enumerate(planes)
-                     if float(p @ np.asarray(QV)) >= 0))
-        probes = sorted(AI._probe_set(qb, 6, 1))
+        probes = _lsh_probes(hyperplanes(6, 64, 42), 1, np.asarray(QV))
         want = (AI.read_ann_index(spark, idx)
                 .where(F.col("bucket").isin(probes)).where(WHERE)
                 .withColumn("score", VEC.dot(F.col("embedding"),
