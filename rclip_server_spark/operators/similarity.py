@@ -18,8 +18,12 @@ Two scoring paths with identical semantics:
     vector.py), JVM-side, whole-stage-codegen'd, DuckDB-oracle-checkable.
   * ``method='gemv'`` — scalar-iterator pandas_udf: each Arrow batch becomes a
     NumPy matrix and one ``M @ q`` BLAS call, preserving the reference's
-    vectorized execution *and* partition parallelism. Faster for wide vectors
-    / large N; the default for the serving path.
+    vectorized execution *and* partition parallelism. Faster at large N:
+    over 100 000 rows on a 4-core host (top-12, median of 5) it beat the
+    SQL fold at every dim measured, 64 to 1024, by 1.3x to 2.4x; on small
+    tables (the 2 000-row bench fixture) the Python-worker overhead makes
+    it the slower path. Opt-in: the default ``method`` is ``'sql'``, and
+    ``'auto'`` (choose_score_method) picks GEMV only above dim 512.
 """
 
 from __future__ import annotations
@@ -65,15 +69,16 @@ def choose_score_method(query_vec) -> str:
     SURVEY §7 'optional SQL-to-BLAS rewrite rule' (a true Catalyst rule
     needs Scala; this dispatcher makes the same decision one level up).
 
-    Measured tradeoff (PLANS.md / ann.brute_force_topk_multi_gemm
-    docstring): at dim<=512 a SINGLE query's codegen'd SQL fold matches
-    Arrow-GEMV wall-for-wall, and the SQL form is oracle-checkable and
-    stays inside whole-stage codegen — so it wins up to the dim where the
-    expression tree outgrows codegen's comfort (JIT'd method bloat);
-    beyond that the Arrow batch transfer amortizes and BLAS wins. Batched
-    multi-query scoring should use brute_force_topk_multi_gemm instead —
-    one data pass for all queries — which no per-row expression can
-    match."""
+    Measured tradeoff: on the 2 000-row bench fixture the codegen'd SQL
+    fold is faster (the Python worker's fixed cost dominates), but over
+    100 000 rows on a 4-core host a SINGLE query's Arrow-GEMV was faster
+    at every dim measured, 64 to 1024, by 1.3x to 2.4x (top-12, median
+    of 5, identical ids; the table is in ROADMAP.md). The dim<=512 cut
+    therefore favours the oracle-checkable SQL form rather than speed
+    at large N; retuning it needs a large-N, wide-vector workload the
+    benchmark does not have. Batched multi-query scoring should use
+    brute_force_topk_multi_gemm instead — one data pass for all
+    queries — which no per-row expression can match."""
     dim = len(np.asarray(query_vec))
     return "sql" if dim <= 512 else "gemv"
 

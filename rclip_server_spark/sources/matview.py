@@ -98,21 +98,16 @@ def _aggregate(df: DataFrame, group_cols: list[str], sum_cols: list[str],
 
 def _read_source(spark: SparkSession, path: str,
                  version: int | None = None) -> DataFrame:
-    """Layout-dispatching source read: flat and bucketed versioned tables
-    both work as view sources (table_changes' snapshot diff already
-    dispatches the same way). Schema-pinned from the manifest
-    (versioned._pinned_schema) — this is the choke point every SQL
-    read and view refresh goes through, and mergeSchema footer
-    inference here costs one Spark job PER TABLE PER STATEMENT (at
-    100 TB, a distributed read of every segment footer). Safe because
-    the commit layer enforces it: type changes are blocked, evolution
-    null-fills by name; legacy manifests without col_types fall back
-    to mergeSchema inside the read."""
-    v = V.current_version(path) if version is None else int(version)
-    m = V._manifest(path, v)
-    if "buckets" in m:
-        return V.read_bucketed(spark, path, v, pin_schema=True)
-    return V.read(spark, path, v, pin_schema=True)
+    """Source read: flat and bucketed versioned tables both work as
+    view sources (versioned.read serves both layouts). Schema-pinned
+    from the manifest (versioned._pinned_schema) — this is the choke
+    point every SQL read and view refresh goes through, and
+    mergeSchema footer inference here costs one Spark job PER TABLE
+    PER STATEMENT (at 100 TB, a distributed read of every segment
+    footer). Safe because the commit layer enforces it: type changes
+    are blocked, evolution null-fills by name; legacy manifests
+    without col_types fall back to mergeSchema inside the read."""
+    return V.read(spark, path, version, pin_schema=True)
 
 
 def _nullsafe_cond(left_alias: str, right_alias: str, cols: list[str]):

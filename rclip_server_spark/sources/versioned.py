@@ -233,7 +233,7 @@ def _commit(path: str, version: int, segments: list[str], op: str,
         logging.getLogger(__name__).warning(
             "versioned table %s has %d segments at v%d; manifests and "
             "commit-time footer reads grow with segment count — run "
-            "compact() (flat) or compact_bucketed() to fold them",
+            "compact() to fold them",
             path, n_segs, version,
         )
     target = _snap_path(path, version)
@@ -495,9 +495,15 @@ def read(spark: SparkSession, path: str, version: int | None = None,
     delete vectors (delete_rows) are applied as scoped broadcast
     anti-joins. ``pin_schema`` reads with the manifest's committed
     schema instead of mergeSchema footer inference (zero Spark jobs at
-    plan time — serving paths; see _pinned_schema for why it's safe)."""
+    plan time — serving paths; see _pinned_schema for why it's safe).
+
+    Serves both layouts: a bucketed version reads every bucket through
+    read_bucketed (declared-but-unwritten columns as typed NULLs, an
+    empty table's schema from the manifest's col_types)."""
     v = current_version(path) if version is None else int(version)
     m = _manifest(path, v)
+    if "buckets" in m:
+        return read_bucketed(spark, path, v, pin_schema=pin_schema)
     return _read_with_deletes(spark, path, m, m["segments"],
                               pin_schema=pin_schema)
 
@@ -715,8 +721,7 @@ def add_constraint(spark: SparkSession, path: str, name: str,
     if name in cons:
         raise ValueError(f"constraint {name!r} already exists on "
                          f"{path}: CHECK ({cons[name]})")
-    df = read_bucketed(spark, path, v) if "buckets" in m \
-        else read(spark, path, v)
+    df = read(spark, path, v)
     try:
         cond = F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
         bad = df.where(~cond).count()
@@ -889,7 +894,8 @@ def _write_delete_vector(spark: SparkSession, path: str, keys,
 
 def append(spark: SparkSession, path: str, batch: DataFrame,
            extra: dict | None = None,
-           parent_version: int | None = None) -> int:
+           parent_version: int | None = None,
+           batch_id: int | None = None) -> int:
     """O(batch) append commit: write one new segment, manifest = parent
     segments + it. The ingest-path commit — never reads or rewrites
     existing data. Zone-map stats (when the table tracks them) cost one
@@ -900,7 +906,11 @@ def append(spark: SparkSession, path: str, batch: DataFrame,
     parent_version+1, so a writer that decided WHAT to append based on
     state read at that version loses with ConcurrentWriteError if anyone
     committed in between (read-modify-write protection — plain appends
-    are order-independent and don't need it; view refreshes do)."""
+    are order-independent and don't need it; view refreshes do).
+
+    ``batch_id`` records a streaming micro-batch's id in the manifest
+    (append_exactly_once's transaction record); such commits are
+    labelled ``stream-append``."""
     v = current_version(path) if parent_version is None \
         else int(parent_version)
     parent = _manifest(path, v)
@@ -908,12 +918,14 @@ def append(spark: SparkSession, path: str, batch: DataFrame,
         # layout dispatch: a bucketed table's append routes rows into
         # per-bucket segments (same O(batch), zero-rewrite contract)
         return append_bucketed(spark, path, batch, extra=extra,
-                               parent_version=v)
-    compat = _check_schema_compat(parent, batch, "append")
-    batch = _apply_constraints(batch, parent, "append")
+                               parent_version=v, batch_id=batch_id)
+    op = "append" if batch_id is None else "stream-append"
+    compat = _check_schema_compat(parent, batch, op)
+    batch = _apply_constraints(batch, parent, op)
     seg = _write_segment(batch, path)
     try:
-        _commit(path, v + 1, parent["segments"] + [seg], "append",
+        _commit(path, v + 1, parent["segments"] + [seg], op,
+                batch_id=batch_id,
                 extra=dict(extra or {})
                 | _carry_stats(spark, path, parent, [seg],
                                parent["segments"])
@@ -1287,11 +1299,8 @@ def truncate(spark: SparkSession, path: str) -> int:
     manifest's bucket map just goes empty), so post-truncate INSERTs
     hash-route exactly as before. Cost: one empty-segment write —
     zero data read, zero data-sized job, same at 100 TB."""
-    v = current_version(path)
-    m = _manifest(path, v)
-    empty = (read_bucketed(spark, path, v) if "buckets" in m
-             else read(spark, path, v)).limit(0)
-    return overwrite(spark, path, empty, op="truncate")
+    return overwrite(spark, path, read(spark, path).limit(0),
+                     op="truncate")
 
 
 _CLONE_DIR = "_clones"
@@ -1576,21 +1585,33 @@ def upsert(spark: SparkSession, path: str, updates: DataFrame, key: str) -> int:
 
 def add_column(spark: SparkSession, path: str, col: str, dtype: str,
                parent_version: int | None = None) -> int:
-    """METADATA-ONLY column add for the BUCKETED layout: commit a new
-    version whose ``col_types`` carries the evolved column — no
-    segment is written (the flat path appends a zero-row evolved
-    segment and lets mergeSchema surface the column; a bucketed table
-    has no natural bucket for an empty segment, so the declaration
-    lives in the manifest and ``read_bucketed`` reconciles
-    declared-but-unwritten columns as typed NULLs). Existing rows read
-    NULL; batches appended with or without the column both work (the
-    drift guard knows the declared type)."""
+    """ALTER TABLE ADD COLUMN as one O(1) commit, on either layout.
+    A flat table appends a zero-row segment carrying the evolved
+    column and lets mergeSchema surface it. A bucketed table has no
+    natural bucket for an empty segment, so its add is METADATA-ONLY:
+    the new version's ``col_types`` carries the column, no segment is
+    written, and ``read`` reconciles declared-but-unwritten columns as
+    typed NULLs. Existing rows read NULL; batches appended with or
+    without the column both work (the drift guard knows the declared
+    type)."""
     v = current_version(path) if parent_version is None \
         else int(parent_version)
     m = _manifest(path, v)
     if "buckets" not in m:
-        raise ValueError("flat tables add columns via a zero-row "
-                         "evolved-schema append (the SQL ALTER path)")
+        import pyspark.sql.functions as F
+
+        df = read(spark, path, v, pin_schema=True)
+        clash = next((c for c in df.columns
+                      if c.lower() == col.lower()), None)
+        if clash:
+            raise ValueError(f"column {clash!r} already exists on "
+                             f"{path} (names resolve case-"
+                             f"insensitively)")
+        try:
+            empty = df.limit(0).withColumn(col, F.lit(None).cast(dtype))
+        except Exception as ex:
+            raise ValueError(f"bad column type {dtype!r}: {ex}") from ex
+        return append(spark, path, empty, parent_version=parent_version)
     from .writer import _BUCKET_COL
 
     if col.lower() == _BUCKET_COL:
@@ -1702,13 +1723,14 @@ def compact(spark: SparkSession, path: str) -> int:
     O(#segments). Under many small appends the manifest balloons
     linearly (pinned by test_manifest_growth_and_compaction); periodic
     compaction restores it to O(1) while readers of older versions stay
-    isolated (old segments live until vacuum). Bucketed tables use
-    compact_bucketed (bucket-at-a-time, only multi-segment buckets).
-    Returns the new version (current version when already compact)."""
+    isolated (old segments live until vacuum). A bucketed table
+    compacts through compact_bucketed (bucket-at-a-time, only
+    multi-segment buckets). Returns the new version (current version
+    when already compact)."""
     v = current_version(path)
     m = _manifest(path, v)
     if "buckets" in m:
-        raise ValueError("bucketed tables compact via compact_bucketed")
+        return compact_bucketed(spark, path)
     if (len(m["segments"]) <= 1 and not m.get("delete_segs")
             and not m.get("hidden_cols")
             and not any(os.path.isabs(s) for s in m["segments"])):
@@ -1747,8 +1769,9 @@ def cluster_zorder(
     partition sort, one partitioned write — never a global sort to a
     single task. Pending delete vectors are materialized by the rewrite.
     Readers of older versions stay isolated (old segments live until
-    vacuum). Flat tables only (bucketed layouts already co-locate by
-    key; recluster those bucket-at-a-time instead)."""
+    vacuum). A bucketed table reclusters bucket-at-a-time through
+    cluster_zorder_bucketed (one z-sorted segment per bucket, so
+    ``n_segments`` does not apply)."""
     import pyspark.sql.functions as F
 
     from .writer import zorder_value
@@ -1756,8 +1779,8 @@ def cluster_zorder(
     v = current_version(path)
     m = _manifest(path, v)
     if "buckets" in m:
-        raise ValueError("cluster_zorder is the flat-table path; bucketed "
-                         "tables are already key-clustered")
+        return cluster_zorder_bucketed(spark, path, x_col, y_col,
+                                       bits=bits)
     df = read(spark, path, v)
     z = zorder_value(F.col(x_col), F.col(y_col), int(bits))
     zdf = df.withColumn("__z", z)
@@ -1902,31 +1925,14 @@ def append_exactly_once(
     the commit manifest, so a crash-replay of the same batch (foreachBatch
     is at-least-once) finds its id already in the log and skips — the
     transactional-sink recipe from the Structured Streaming docs, with the
-    manifest log as the transaction record. Returns the committed version,
-    or None when the batch was already committed (replay)."""
+    manifest log as the transaction record. Either layout (append
+    dispatches; a table converted to bucketed mid-stream keeps its sink
+    working), and an empty batch still commits its id. Returns the
+    committed version, or None when the batch was already committed
+    (replay)."""
     if int(batch_id) in committed_batch_ids(path):
         return None
-    v = current_version(path)
-    parent = _manifest(path, v)
-    if "buckets" in parent:
-        # layout dispatch: a table converted to bucketed mid-stream
-        # (OPTIMIZE ... BUCKET BY) keeps its exactly-once sink working
-        return append_bucketed_exactly_once(spark, path, batch,
-                                            batch_id)
-    compat = _check_schema_compat(parent, batch, "stream-append")
-    batch = _apply_constraints(batch, parent, "stream-append")
-    seg = _write_segment(batch, path)
-    try:
-        _commit(path, v + 1, parent["segments"] + [seg],
-                "stream-append", batch_id=int(batch_id),
-                extra=_carry_stats(spark, path, parent, [seg],
-                                   parent["segments"])
-                | _carry_deletes(parent) | _carry_hidden(parent)
-                | compat)
-    except ConcurrentWriteError:
-        shutil.rmtree(os.path.join(path, seg))
-        raise
-    return v + 1
+    return append(spark, path, batch, batch_id=int(batch_id))
 
 
 def upsert_with_retry(
@@ -2523,12 +2529,15 @@ def read_bucketed(
     buckets: list[int] | None = None, pin_schema: bool = False,
 ) -> DataFrame:
     """Read a bucketed versioned table AT a version (default head),
-    optionally restricted to a bucket subset — restriction is directory
-    pruning at MANIFEST-resolution time: non-listed buckets' segments are
-    never even named in the plan (the at-rest analog of a planning-time
-    partition filter). ``pin_schema`` additionally reads with the
-    manifest's committed schema instead of mergeSchema footer
-    inference — ZERO Spark jobs at plan time (serving paths)."""
+    restricted to a bucket subset — restriction is directory pruning at
+    MANIFEST-resolution time: non-listed buckets' segments are never
+    even named in the plan (the at-rest analog of a planning-time
+    partition filter). ``buckets=None`` reads every bucket; that is
+    what ``read`` does for a bucketed version, so callers that want the
+    whole table call ``read`` and never need to know the layout.
+    ``pin_schema`` additionally reads with the manifest's committed
+    schema instead of mergeSchema footer inference — ZERO Spark jobs
+    at plan time (serving paths)."""
     v = current_version(path) if version is None else int(version)
     m = _manifest(path, v)
     _, _, bmap = _bucketed_meta(m)
@@ -2610,7 +2619,7 @@ def read_bucketed_pruned(
     keep = [s for b in ids for s in bmap.get(b, [])
             if zone_survives(stats.get(s, {}), ranges)]
     if not keep:
-        return read_bucketed(spark, path, v).limit(0)
+        return read(spark, path, v).limit(0)
     out = _reconcile_declared(
         _read_with_deletes(spark, path, m, keep), m)
     return _apply_ranges(out, ranges)
@@ -2735,6 +2744,7 @@ def upsert_bucketed(
 def append_bucketed(
     spark: SparkSession, path: str, batch: DataFrame,
     extra: dict | None = None, parent_version: int | None = None,
+    batch_id: int | None = None,
 ) -> int:
     """O(batch) ingest commit: write the batch's per-bucket segments and
     APPEND them to the touched buckets' segment lists — existing data is
@@ -2743,25 +2753,29 @@ def append_bucketed(
     Pending delete vectors carry forward untouched — the new segments
     are outside every vector's scope, so re-inserts of a deleted key
     are visible (same delete-then-insert semantics as the flat append).
-    ``extra``/``parent_version``: same contracts as append()."""
+    ``extra``/``parent_version``/``batch_id``: same contracts as
+    append(); a ``batch_id`` commit is labelled
+    ``stream-append-bucketed`` and commits even for an empty batch."""
     from .writer import _bucket_expr, _BUCKET_COL
 
     v = current_version(path) if parent_version is None \
         else int(parent_version)
     m = _manifest(path, v)
     key, n_buckets, bmap = _bucketed_meta(m)
-    compat = _check_schema_compat(m, batch, "append-bucketed")
-    batch = _apply_constraints(batch, m, "append-bucketed")
+    op = "append-bucketed" if batch_id is None \
+        else "stream-append-bucketed"
+    compat = _check_schema_compat(m, batch, op)
+    batch = _apply_constraints(batch, m, op)
     bb = batch.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
     touched = _bucket_ids(bb)
-    if not touched:
+    if not touched and batch_id is None:
         return v
-    segs = _write_bucket_segments(bb, path, touched)
+    segs = _write_bucket_segments(bb, path, touched) if touched else {}
     new_bmap = dict(bmap)
     for b, s in segs.items():
         new_bmap[str(b)] = new_bmap.get(str(b), []) + [s]
     try:
-        _commit(path, v + 1, None, "append-bucketed",
+        _commit(path, v + 1, None, op, batch_id=batch_id,
                 extra=dict(extra or {})
                 | {"bucket_key": key, "n_buckets": n_buckets,
                    "buckets": new_bmap}
@@ -3006,44 +3020,6 @@ def upsert_bucketed_with_retry(
     raise AssertionError("unreachable")
 
 
-def append_bucketed_exactly_once(
-    spark: SparkSession, path: str, batch: DataFrame, batch_id: int
-) -> int | None:
-    """EXACTLY-ONCE streaming append into the BUCKETED versioned table:
-    same transactional-record contract as append_exactly_once (the batch
-    id lives in the commit manifest; replays are detected and skipped),
-    same zero-rewrite cost as append_bucketed (per-bucket segment
-    accretion, existing data never read). Returns the committed version,
-    or None when the batch was already committed (replay)."""
-    if int(batch_id) in committed_batch_ids(path):
-        return None
-    from .writer import _bucket_expr, _BUCKET_COL
-
-    v = current_version(path)
-    m = _manifest(path, v)
-    key, n_buckets, bmap = _bucketed_meta(m)
-    compat = _check_schema_compat(m, batch, "stream-append-bucketed")
-    batch = _apply_constraints(batch, m, "stream-append-bucketed")
-    bb = batch.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-    touched = _bucket_ids(bb)
-    segs = _write_bucket_segments(bb, path, touched) if touched else {}
-    new_bmap = dict(bmap)
-    for b, s in segs.items():
-        new_bmap[str(b)] = new_bmap.get(str(b), []) + [s]
-    try:
-        _commit(path, v + 1, None, "stream-append-bucketed",
-                batch_id=int(batch_id),
-                extra={"bucket_key": key, "n_buckets": n_buckets,
-                       "buckets": new_bmap}
-                | _carry_stats_bucketed(spark, path, m,
-                                        list(segs.values()), new_bmap)
-                | _carry_deletes(m) | _carry_hidden(m) | compat)
-    except ConcurrentWriteError:
-        _cleanup_segments(path, segs.values())
-        raise
-    return v + 1
-
-
 def _changes_fast_path(
     spark: SparkSession, path: str, from_version: int,
     to_version: int | None,
@@ -3071,10 +3047,8 @@ def _changes_fast_path(
     if not all(op in APPEND_OPS for op in ops):
         return None, from_v, to_v, ops
     if not new_segs:
-        m_to = _manifest(path, to_v)
-        base = read(spark, path, to_v) if m_to.get("segments") is not None \
-            else read_bucketed(spark, path, to_v)
-        return (base.limit(0).withColumn("_change_type", F.lit("insert")),
+        return (read(spark, path, to_v).limit(0)
+                .withColumn("_change_type", F.lit("insert")),
                 from_v, to_v, ops)
     dirs = [os.path.join(path, s) for s in new_segs]
     # reconcile DECLARED-but-unwritten columns as typed NULLs, same as
@@ -3124,12 +3098,7 @@ def _aligned_snapshots(
     lacks it. Returns (old, new, cols)."""
     import pyspark.sql.functions as F
 
-    def _snap(v):
-        m = _manifest(path, v)
-        return read_bucketed(spark, path, v) if "buckets" in m \
-            else read(spark, path, v)
-
-    old, new = _snap(from_v), _snap(to_v)
+    old, new = read(spark, path, from_v), read(spark, path, to_v)
     old_t = {f.name: f.dataType for f in old.schema.fields}
     new_t = {f.name: f.dataType for f in new.schema.fields}
     cols = list(new.columns) + [c for c in old.columns if c not in new_t]
@@ -3435,9 +3404,7 @@ def analyze(spark: SparkSession, path: str,
     from pyspark.sql import functions as F
 
     v = current_version(path)
-    m = _manifest(path, v)
-    df = read_bucketed(spark, path, v) if "buckets" in m \
-        else read(spark, path, v)
+    df = read(spark, path, v)
     types = dict(df.dtypes)
     if columns is not None:
         # resolve case-insensitively, like every other schema verb
@@ -3516,7 +3483,7 @@ def register_sql_view(spark: SparkSession, name: str, path: str,
     registration, so every query against the view reads a consistent
     snapshot regardless of concurrent commits (re-register to advance).
     Works for flat and bucketed layouts and applies pending delete
-    vectors, because it is just read()/read_bucketed() under a name.
+    vectors, because it is just read() under a name.
 
     Retention contract: the view names the registered version's segment
     paths, so a later rewrite + ``vacuum`` that reaps them breaks the
@@ -3524,8 +3491,4 @@ def register_sql_view(spark: SparkSession, name: str, path: str,
     matview cursors and streaming checkpoints. Keep ``keep_last`` /
     ``retain_seconds`` covering the lifetime of registered views, or
     re-register after table maintenance."""
-    v = current_version(path) if version is None else int(version)
-    m = _manifest(path, v)
-    df = read_bucketed(spark, path, v) if "buckets" in m \
-        else read(spark, path, v)
-    df.createOrReplaceTempView(name)
+    read(spark, path, version).createOrReplaceTempView(name)

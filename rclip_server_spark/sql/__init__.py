@@ -79,10 +79,11 @@ the Spark engine the equivalent entry point for its storage layer:
   view's refresh cursor (matview.vacuum_source_safely with the whole
   catalog as the dependent-view list).
 * ``OPTIMIZE t [ZORDER BY (x, y) | BUCKET BY (key, n)]`` — fold
-  accreted segments into one committed version (versioned.compact /
-  compact_bucketed), recluster by Morton key with zone maps on both
-  columns (cluster_zorder), or migrate a flat table to the
-  hash-bucketed co-located layout (convert_to_bucketed).
+  accreted segments into one committed version (versioned.compact,
+  either layout), recluster by Morton key (cluster_zorder: zone maps
+  on both columns when flat, within-bucket z-sort when bucketed), or
+  migrate a flat table to the hash-bucketed co-located layout
+  (convert_to_bucketed).
 * ``TRUNCATE TABLE t`` — reversible empty-the-table commit (zero-row
   overwrite; RESTORE undoes it; a bucketed table keeps its layout)
 * ``ANALYZE TABLE t [COLUMNS (a, b)] [EXACT]`` / ``DESCRIBE STATS t``
@@ -120,7 +121,6 @@ import re
 import shutil
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..sources import matview as MV
 from ..sources import versioned as V
@@ -141,7 +141,6 @@ from ._catalog import Catalog  # noqa: F401
 from ._dml import (  # noqa: F401
     _delete,
     _insert,
-    _is_bucketed as _is_bucketed_entry,
     _merge,
     _merge_stage_plans,
     _update,
@@ -715,32 +714,10 @@ def execute(spark: SparkSession, statement: str, catalog: Catalog):
                            "DROP COLUMN c")
         name, col, type_text = m.group(1), m.group(2), m.group(3).strip()
         e = _writable_table(catalog, name, "ALTER TABLE")
-        if _is_bucketed_entry(e):
-            # bucketed twin: metadata-only manifest evolution (there
-            # is no natural bucket for a zero-row segment); reads
-            # reconcile the declared-but-unwritten column as typed
-            # NULLs (versioned.add_column / read_bucketed)
-            try:
-                ver = V.add_column(spark, e["path"], col, type_text)
-            except ValueError as ex:
-                raise SqlError(str(ex)) from ex
-            return {"status": "altered", "name": name,
-                    "added": {col: type_text}, "version": ver}
-        df = _read_entry(spark, e)
-        clash = next((c for c in df.columns
-                      if c.lower() == col.lower()), None)
-        if clash:
-            raise SqlError(f"column {clash!r} already exists on "
-                           f"{name} (names resolve case-"
-                           f"insensitively)")
         try:
-            empty = df.limit(0).withColumn(
-                col, F.lit(None).cast(type_text))
-        except Exception as ex:
-            raise SqlError(
-                f"bad column type {type_text!r} for ALTER TABLE "
-                f"ADD COLUMN: {ex}") from ex
-        ver = V.append(spark, e["path"], empty)
+            ver = V.add_column(spark, e["path"], col, type_text)
+        except ValueError as ex:
+            raise SqlError(str(ex)) from ex
         return {"status": "altered", "name": name,
                 "added": {col: type_text}, "version": ver}
 
@@ -1135,16 +1112,8 @@ def execute(spark: SparkSession, statement: str, catalog: Catalog):
             if not cur.done():
                 raise SqlError("trailing tokens after ZORDER BY (...)")
             try:
-                if _is_bucketed_entry(e):
-                    # WITHIN-bucket reclustering: the bucket hash
-                    # stays the co-location story; the z-sort makes
-                    # parquet row-group stats selective inside each
-                    # bucket (partition + ZORDER layering)
-                    ver = V.cluster_zorder_bucketed(
-                        spark, e["path"], cols[0], cols[1])
-                else:
-                    ver = V.cluster_zorder(spark, e["path"], cols[0],
-                                           cols[1])
+                ver = V.cluster_zorder(spark, e["path"], cols[0],
+                                       cols[1])
             except ValueError as ex:
                 raise SqlError(str(ex)) from ex
             return {"status": "optimized", "name": name,
@@ -1224,10 +1193,7 @@ def execute(spark: SparkSession, statement: str, catalog: Catalog):
         if not cur.done():
             raise SqlError("OPTIMIZE t [ZORDER BY (x, y) | "
                            "BUCKET BY (key, n)]")
-        if _is_bucketed_entry(e):
-            ver = V.compact_bucketed(spark, e["path"])
-        else:
-            ver = V.compact(spark, e["path"])
+        ver = V.compact(spark, e["path"])
         return {"status": "optimized", "name": name, "version": ver}
 
     if head == "truncate":

@@ -34,15 +34,6 @@ def _writable_table(catalog: Catalog, name: str, verb: str) -> dict:
     return e
 
 
-
-def _is_bucketed(e: dict, version: int | None = None) -> bool:
-    """Layout test: one driver-side manifest-JSON read (pass the
-    version a statement already resolved to skip re-resolving the
-    head)."""
-    v = V.current_version(e["path"]) if version is None else version
-    return "buckets" in V._manifest(e["path"], v)
-
-
 def _insert(spark: SparkSession, catalog: Catalog, name: str,
             body: str, overwrite: bool = False) -> dict:
     """INSERT INTO = O(batch) append commit; INSERT OVERWRITE = one
@@ -61,9 +52,6 @@ def _insert(spark: SparkSession, catalog: Catalog, name: str,
     df = df.select(*[
         F.col(c).cast(f.dataType).alias(f.name)
         for c, f in zip(df.columns, target.fields)])
-    if _is_bucketed(e) and not overwrite:
-        ver = V.append_bucketed(spark, e["path"], df)
-        return {"status": "inserted", "name": name, "version": ver}
     if overwrite:
         ver = V.overwrite(spark, e["path"], df)
         return {"status": "overwritten", "name": name, "version": ver}
@@ -421,7 +409,6 @@ def _merge(spark: SparkSession, catalog: Catalog, text: str) -> dict:
         and [c[:2] for c in matched] in ([], [(None, "update_star")])
         and [c[:2] for c in not_matched] in ([], [(None,
                                                    "insert_star")]))
-    bucketed = _is_bucketed(e, ver0)
     if not star_upsert:
         # conditional clauses work on BOTH layouts: the engine commits
         # through versioned.delete_rows / delete_and_append / append,
@@ -445,7 +432,9 @@ def _merge(spark: SparkSession, catalog: Catalog, text: str) -> dict:
         for c in target.columns]).persist()
     try:
         if matched and not_matched:
-            if bucketed:
+            # a per-layout strategy, not a per-layout verb: each
+            # layout checks the source's duplicate keys its own way
+            if "buckets" in V._manifest(e["path"], ver0):
                 # bucketed full upsert: only the touched buckets are
                 # read and rewritten, committed atomically across
                 # them (OCC rebase loop). The dup-key guard's two

@@ -67,18 +67,19 @@ def start_stream_upsert(
     key: str = "filepath",
     latest_col: str | None = None,
     checkpoint_dir: str | None = None,
-    bucketed: bool = False,
 ):
     """Start the stream: each micro-batch MERGE-upserts into ``path`` —
     conditionally on ``latest_col`` when given (order/replay-proof), else
-    replace-on-key. With ``bucketed=True`` the target must have been
-    created by ``writer.create_bucketed_table`` and each micro-batch
-    rewrites ONLY the hash-buckets its keys touch — the continuous-ingest
-    shape that stays bounded at 100 TB (per-batch cost scales with the
-    batch's key spread, never the table). Bucketed mode is replace-on-key
-    (replay-idempotent: replaying a batch rewrites the same buckets to the
-    same contents); combine with ``latest_col`` only in flat mode.
+    replace-on-key. The target's layout decides the merge: a table
+    created by ``writer.create_bucketed_table`` (it records
+    ``_bucket_spec.json``) has each micro-batch rewrite ONLY the
+    hash-buckets its keys touch — the continuous-ingest shape that stays
+    bounded at 100 TB (per-batch cost scales with the batch's key
+    spread, never the table). A bucketed target is replace-on-key
+    (replay-idempotent: replaying a batch rewrites the same buckets to
+    the same contents); ``latest_col`` needs a flat target.
     Returns the StreamingQuery; callers stop it or processAllAvailable."""
+    bucketed = os.path.exists(os.path.join(path, writer._BUCKET_SPEC))
     if bucketed and latest_col is not None:
         raise ValueError("bucketed streaming upsert is replace-on-key; "
                          "latest_col is only supported in flat mode")
@@ -102,7 +103,6 @@ def start_stream_append_versioned(
     spark: SparkSession,
     path: str,
     checkpoint_dir: str | None = None,
-    bucketed: bool = False,
 ):
     """Append-only ingest into a ``sources.versioned`` table with EXACT
     exactly-once delivery: each micro-batch commits one immutable segment
@@ -113,17 +113,16 @@ def start_stream_append_versioned(
     plain-parquet equivalent of Delta's txnAppId/txnVersion sink protocol,
     and the log doubles as time travel over the ingest history.
 
-    ``bucketed=True`` targets a ``versioned.create_bucketed`` table: the
-    same exactly-once contract with per-bucket segment accretion (zero
-    rewrite of existing data; ``versioned.compact_bucketed`` folds the
-    accreted segments down as its own committed version)."""
+    The same sink serves both layouts, because
+    ``versioned.append_exactly_once`` reads the layout from the table's
+    manifest: a ``versioned.create_bucketed`` table gets per-bucket
+    segment accretion (zero rewrite of existing data;
+    ``versioned.compact`` folds the accreted segments down as its own
+    committed version)."""
     from ..sources import versioned
 
     def _append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if bucketed:
-            versioned.append_bucketed_exactly_once(spark, path, batch_df, batch_id)
-        else:
-            versioned.append_exactly_once(spark, path, batch_df, batch_id)
+        versioned.append_exactly_once(spark, path, batch_df, batch_id)
 
     out = stream_df.writeStream.foreachBatch(_append_batch).outputMode("append")
     if checkpoint_dir is not None:
@@ -149,9 +148,10 @@ def start_file_ingest_stream(
     The scan is SCHEMAFUL from the TABLE's declared schema (same
     contract as COPY FROM: no inference job, a malformed value fails
     the batch, schema drift is refused by the append guard), and a
-    bucketed target hash-routes per bucket automatically
-    (append_bucketed_exactly_once). ``max_files_per_trigger`` bounds a
-    batch for steady latency under a backlog.
+    bucketed target hash-routes per bucket automatically (the
+    exactly-once append reads the layout from the manifest).
+    ``max_files_per_trigger`` bounds a batch for steady latency under
+    a backlog.
 
     Exactly-once identity lives in (checkpoint, table): RESUME a
     stream by reusing its checkpoint_dir — batch ids continue and the
@@ -165,10 +165,7 @@ def start_file_ingest_stream(
     if fmt not in ("parquet", "csv", "ndjson"):
         raise ValueError(f"format must be parquet, csv, or ndjson, "
                          f"got {fmt!r}")
-    m = V._manifest(table_path, V.current_version(table_path))
-    bucketed = "buckets" in m
-    snap = (V.read_bucketed(spark, table_path) if bucketed
-            else V.read(spark, table_path)).limit(0)
+    snap = V.read(spark, table_path).limit(0)
     # FAILFAST: "a malformed value fails the batch" must be literal —
     # the default PERMISSIVE mode would silently commit NULLs for
     # unparseable values (which even pass CHECK constraints under the
@@ -184,7 +181,7 @@ def start_file_ingest_stream(
     else:
         stream = rd.parquet(src_dir)
     return start_stream_append_versioned(
-        stream, spark, table_path, checkpoint_dir, bucketed=bucketed)
+        stream, spark, table_path, checkpoint_dir)
 
 
 def _start_view_refresh_stream(

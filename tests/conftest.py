@@ -118,9 +118,11 @@ def pytest_collection_modifyitems(config, items):
     slow = pytest.mark.slow
     for item in items:
         fname = os.path.basename(str(item.fspath))
+        # doctest and other non-Function items have no cls/originalname
+        cls = getattr(item, "cls", None)
         if (fname in _SLOW_FILES
-                or (item.cls is not None and item.cls.__name__ in _SLOW_CLASSES)
-                or item.originalname in _SLOW_TESTS):
+                or (cls is not None and cls.__name__ in _SLOW_CLASSES)
+                or getattr(item, "originalname", item.name) in _SLOW_TESTS):
             item.add_marker(slow)
 
 

@@ -52,10 +52,13 @@ def test_add_column_guards(spark, tmp_path):
         V.add_column(spark, t, "NAME", "string")  # case-insensitive
     with pytest.raises(ValueError, match="bad column type"):
         V.add_column(spark, t, "z", "not_a_type<<")
+    # the flat layout shares the verb, and with it the same guards
     flat = str(tmp_path / "flat")
     V.create(spark, flat, spark.createDataFrame([(1,)], "id INT"))
-    with pytest.raises(ValueError, match="flat tables"):
-        V.add_column(spark, flat, "z", "bigint")
+    with pytest.raises(ValueError, match="already exists"):
+        V.add_column(spark, flat, "ID", "bigint")
+    with pytest.raises(ValueError, match="bad column type"):
+        V.add_column(spark, flat, "z", "not_a_type<<")
 
 
 def test_drop_column_hidden_then_materialized(spark, tmp_path):

@@ -845,7 +845,7 @@ def test_streaming_bucketed_upsert_sink(spark, tmp_path, embeddings):
         .parquet(src_dir + "/*.parquet")
     )
     q = sink.start_stream_upsert(
-        stream, spark, table, key="filepath", bucketed=True,
+        stream, spark, table, key="filepath",
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     try:
@@ -3338,19 +3338,6 @@ class TestVersionedBucketed:
         got = dict((r.id, r.val) for r in V.read_bucketed(spark, t).collect())
         assert got[3] == "X" and got[500] == "zzz"  # BOTH writers' changes
 
-    def test_append_bucketed_exactly_once_replay(self, spark, tmp_path):
-        """The bucketed twin of append_exactly_once: replayed batch ids are
-        detected in the manifest log and skipped; rows land exactly once
-        with zero rewrite of existing segments."""
-        from rclip_server_spark.sources import versioned as V
-
-        t = str(tmp_path / "vb")
-        V.create_bucketed(spark, t, self._base(spark), "id", n_buckets=8)
-        b = self._df(spark, [(900, "s0"), (901, "s1")])
-        assert V.append_bucketed_exactly_once(spark, t, b, batch_id=5) == 2
-        assert V.append_bucketed_exactly_once(spark, t, b, batch_id=5) is None
-        assert V.read_bucketed(spark, t).where("id >= 900").count() == 2
-
     def test_table_changes_append_only_is_delta_read(self, spark, tmp_path):
         """CDC fast path: an append-only interval's change set is exactly
         the new segments' rows — the plan reads O(delta), touching no
@@ -3483,6 +3470,64 @@ class TestVersionedBucketed:
         assert V.read_bucketed(spark, t).count() == 200
         with pytest.raises(FileNotFoundError):
             V.read_bucketed(spark, t, version=1)
+
+
+@pytest.mark.parametrize("layout", ["flat", "bucketed"])
+def test_versioned_verbs_serve_both_layouts(spark, tmp_path, layout):
+    """read, compact, cluster_zorder, add_column and append_exactly_once
+    are one verb each: the table's manifest picks the layout, so no
+    caller has to branch on it. Covers the exactly-once replay of a
+    non-empty and of an empty batch (an empty batch still commits its
+    id, so its replay is skipped too)."""
+    from rclip_server_spark.sources import versioned as V
+
+    flat = layout == "flat"
+    t = str(tmp_path / layout)
+    base = spark.createDataFrame([(i, i % 7) for i in range(40)],
+                                 "id bigint, val bigint")
+    if flat:
+        V.create(spark, t, base)
+    else:
+        V.create_bucketed(spark, t, base, "id", n_buckets=4)
+    want = sorted(map(tuple, base.collect()))
+
+    def rows():
+        return sorted(map(tuple, V.read(spark, t).collect()))
+
+    def last_op():
+        return V.history(t)[-1]["op"]
+
+    assert rows() == want
+
+    batch = spark.createDataFrame([(900, 1), (901, 2)], base.schema)
+    v = V.current_version(t)
+    assert V.append_exactly_once(spark, t, batch, batch_id=5) == v + 1
+    assert V.append_exactly_once(spark, t, batch, batch_id=5) is None
+    assert V.append_exactly_once(spark, t, batch.limit(0), 6) == v + 2
+    assert V.append_exactly_once(spark, t, batch.limit(0), 6) is None
+    assert V.current_version(t) == v + 2
+    assert {5, 6} <= V.committed_batch_ids(t)
+    # zero rewrite: every existing segment is carried, only new ones added
+    assert V._manifest_segments(V._manifest(t, v)) <= \
+        V._manifest_segments(V._manifest(t, v + 1))
+    assert last_op() == ("stream-append" if flat
+                         else "stream-append-bucketed")
+    want = sorted(want + [(900, 1), (901, 2)])
+    assert rows() == want
+
+    assert V.compact(spark, t) == v + 3
+    assert last_op() == ("compact" if flat else "compact-bucketed")
+    assert rows() == want
+
+    assert V.cluster_zorder(spark, t, "id", "val") == v + 4
+    assert last_op() == ("cluster-zorder" if flat else "zorder-bucketed")
+    assert rows() == want
+
+    assert V.add_column(spark, t, "bonus", "bigint") == v + 5
+    df = V.read(spark, t)
+    assert df.columns == ["id", "val", "bonus"]
+    assert df.where("bonus IS NOT NULL").count() == 0
+    assert sorted((r.id, r.val) for r in df.collect()) == want
 
 
 def test_stream_versioned_append_exactly_once_under_crash_replay(
